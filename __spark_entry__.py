@@ -28,6 +28,7 @@ import pandas as pd
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
+from polars_pipe_spark.materialize import materialize
 from polars_pipe_spark.sources.tables import tz_normalise
 
 
@@ -895,7 +896,7 @@ def _q33_ivf_topk(spark, sf):
     emb = _t(spark, sf, "embeddings")
     # persist: bf feeds the overlap join AND the per-query denominator
     # (r8 plan-sweep multi-scan rule) — tiny frame, brute-force lineage
-    bf = _q28_cosine_topk(spark, sf).select("query_id", "neighbor_id").persist()
+    bf = materialize(_q28_cosine_topk(spark, sf).select("query_id", "neighbor_id"))
     ivf = ivf_topk(
         emb, emb.filter(F.col("vec_id") < 20), "embedding", "vec_id", "vec_id",
         k=5, n_centroids=8, n_probe=2,
@@ -1441,7 +1442,7 @@ def _q58_tfidf(spark, sf):
     # dies at 100×. groupBy gets a map-side partial aggregate, so each
     # executor contributes one (token, partial_count) row regardless of
     # skew, and the join back is agg-sized, not corpus-sized.
-    tf = tok.groupBy("doc_id", "token").agg(F.count(F.lit(1)).alias("tf")).persist()
+    tf = materialize(tok.groupBy("doc_id", "token").agg(F.count(F.lit(1)).alias("tf")))
     n_docs = docs.agg(F.countDistinct("doc_id").alias("n_docs"))
     dfreq = tf.groupBy("token").agg(F.count(F.lit(1)).alias("df"))
     scored = (
@@ -1638,10 +1639,12 @@ def _q63_dedup_clusters(spark, sf):
     propagation, oracle-checked against a recursive CTE."""
     from polars_pipe_spark.functions.dedup import dedup_clusters, minhash_near_dups
 
-    pairs = minhash_near_dups(
-        _t_par(spark, sf, "documents"), "text", "doc_id",
-        shingle_k=3, sig_k=8, n_bands=4, threshold=0.2,
-    ).select("id_a", "id_b").persist()
+    pairs = materialize(
+        minhash_near_dups(
+            _t_par(spark, sf, "documents"), "text", "doc_id",
+            shingle_k=3, sig_k=8, n_bands=4, threshold=0.2,
+        ).select("id_a", "id_b")
+    )
     out = dedup_clusters(pairs)
     return out.select(F.col("node").alias("doc_id"), "cluster_id")
 
@@ -1849,12 +1852,11 @@ def _q73_dedup_apply(spark, sf):
     from polars_pipe_spark.functions.dedup import dedup_clusters, minhash_near_dups
 
     docs = _t_par(spark, sf, "documents")
-    pairs = (
+    pairs = materialize(
         minhash_near_dups(
             docs, "text", "doc_id", shingle_k=3, sig_k=8, n_bands=4, threshold=0.2
         )
         .select("id_a", "id_b")
-        .persist()
     )
     clusters = dedup_clusters(pairs)  # (node, cluster_id = min id in comp)
     # drop every clustered doc that is not its cluster's representative
@@ -2150,14 +2152,14 @@ def _q89_bigram_pmi(spark, sf):
     docs = _t_par(spark, sf, "documents")
     tok = docs.select("doc_id", F.posexplode(tokens("text")).alias("pos", "tok"))
     w = Window.partitionBy("doc_id").orderBy("pos")
-    bi = (
+    # tiny vocab-pair frame, read twice (totals + ranking)
+    bi = materialize(
         tok.withColumn("nxt", F.lead("tok").over(w))
         .filter(F.col("nxt").isNotNull())
         .groupBy(F.col("tok").alias("x"), F.col("nxt").alias("y"))
         .agg(F.count(F.lit(1)).alias("c_xy"))
-        .persist()  # tiny vocab-pair frame, read twice (totals + ranking)
     )
-    uni = tok.groupBy("tok").agg(F.count(F.lit(1)).alias("c")).persist()
+    uni = materialize(tok.groupBy("tok").agg(F.count(F.lit(1)).alias("c")))
     tot = uni.agg(F.sum("c").cast("long").alias("n_uni")).crossJoin(
         bi.agg(F.sum("c_xy").cast("long").alias("n_bi"))
     )
@@ -3108,10 +3110,9 @@ def _q131_unigram_logprob(spark, sf):
     # rounded decimal lp equals tf × lp exactly (decimal × integer).
     # The old token-grain join re-ran the regex tokenizer on both join
     # inputs and shuffled every token occurrence (17.8 s at sf3).
-    dt = (
+    dt = materialize(
         tok.groupBy("doc_id", "term")
         .agg(F.count(F.lit(1)).alias("tf"))
-        .persist()
     )
     vocab = dt.groupBy("term").agg(F.sum("tf").alias("cnt"))
     total = vocab.agg(F.sum("cnt").alias("total"))
@@ -3152,7 +3153,7 @@ def _q133_ann_recall(spark, sf):
     Scaled-integer recall via positive integer division (engine-safe)."""
     # persist: bf is consumed twice (overlap join + denominator) and its
     # lineage is the full brute-force scan (r8 plan-sweep multi-scan rule)
-    bf = _q28_cosine_topk(spark, sf).select("query_id", "neighbor_id").persist()
+    bf = materialize(_q28_cosine_topk(spark, sf).select("query_id", "neighbor_id"))
     lsh = _q29_lsh_topk(spark, sf).select("query_id", "neighbor_id")
     overlap = (
         bf.join(lsh, ["query_id", "neighbor_id"])
@@ -3454,9 +3455,11 @@ def _q144_quality_rep_dedup(spark, sf):
     from polars_pipe_spark.functions.text import quality_score
 
     docs = _t_par(spark, sf, "documents")
-    pairs = minhash_near_dups(
-        docs, "text", "doc_id", shingle_k=3, sig_k=8, n_bands=4, threshold=0.2
-    ).select("id_a", "id_b").persist()
+    pairs = materialize(
+        minhash_near_dups(
+            docs, "text", "doc_id", shingle_k=3, sig_k=8, n_bands=4, threshold=0.2
+        ).select("id_a", "id_b")
+    )
     clusters = dedup_clusters(pairs)
     qual = docs.select(F.col("doc_id"), quality_score("text").alias("q"))
     j = clusters.join(qual, clusters.node == qual.doc_id).select(
@@ -3619,7 +3622,7 @@ def _q149_pca_whiten(spark, sf):
     from polars_pipe_spark.functions.similarity import pca_whiten
 
     emb = _t(spark, sf, "embeddings")
-    out = pca_whiten(emb, "embedding", "vec_id", dims=8).persist()
+    out = materialize(pca_whiten(emb, "embedding", "vec_id", dims=8))
     wd = out.select("vec_id", F.posexplode("whitened").alias("i", "wi"))
     n = out.count()
     cov = (
@@ -4343,16 +4346,15 @@ def _q173_retrieval_eval(spark, sf):
     nterms = queries.groupBy("query_id").agg(
         F.count_distinct("term").alias("n_terms")
     )
-    rel = (
+    # persist: rel feeds the per-query totals AND the top-k hit join;
+    # without it the tokenizing explode runs twice (r8 plan-sweep
+    # multi-scan rule). Small frame: only all-terms-matching docs.
+    rel = materialize(
         tok.groupBy("query_id", "doc_id")
         .agg(F.count_distinct("term").alias("n_hit"))
         .join(F.broadcast(nterms), "query_id")
         .filter(F.col("n_hit") == F.col("n_terms"))
         .select("query_id", "doc_id")
-        # persist: rel feeds the per-query totals AND the top-k hit join;
-        # without it the tokenizing explode runs twice (r8 plan-sweep
-        # multi-scan rule). Small frame: only all-terms-matching docs.
-        .persist()
     )
     rel_total = rel.groupBy("query_id").agg(
         F.count(F.lit(1)).alias("n_relevant")
@@ -4668,7 +4670,7 @@ def _q181_ann_dashboard(spark, sf):
     # so without a persist the dashboard re-runs brute force 4 times
     # (r8 plan-sweep multi-scan rule). Tiny frame (k rows per query id),
     # huge lineage — the canonical persist case.
-    exact = prep(_q28_cosine_topk(spark, sf)).persist()
+    exact = materialize(prep(_q28_cosine_topk(spark, sf)))
     en = exact.agg(F.count(F.lit(1)).alias("n_exact"))
     methods = [
         ("ivf", _q137_ivf_pretrained),
@@ -5112,9 +5114,11 @@ def _q196_containment_neardup(spark, sf):
     # verify sides); 48-bit hashes keep the cached footprint tiny
     # (#shingles × 8 B) — contrast q27, where caching giant char-gram
     # arrays lost to recompute
-    g = df.select(
-        F.col("doc_id").alias("id"), F.col("source"), F.array_sort(hashed).alias("grams")
-    ).withColumn("ng", F.size("grams")).persist()
+    g = materialize(
+        df.select(
+            F.col("doc_id").alias("id"), F.col("source"), F.array_sort(hashed).alias("grams")
+        ).withColumn("ng", F.size("grams"))
+    )
     dfreq = (
         g.select(F.explode("grams").alias("gram"))
         .groupBy("gram")
@@ -5799,7 +5803,7 @@ def _q216_association_rules(spark, sf):
     # the full-corpus explode + vocab groupBy re-run once per side (r8
     # plan-sweep multi-scan rule). Bounded frame: only tokens in the
     # 30-term vocab survive the broadcast join.
-    vt = tok.join(F.broadcast(vocab), "token").persist()
+    vt = materialize(tok.join(F.broadcast(vocab), "token"))
     a = vt.select("doc_id", F.col("token").alias("t_a"), F.col("n_t").alias("n_a"))
     b = vt.select("doc_id", F.col("token").alias("t_b"), F.col("n_t").alias("n_b"))
     pair_counts = (
@@ -6261,7 +6265,7 @@ def _q228_session_basket_lift(spark, sf):
     # sides) and its lineage is the sessionize window shuffle — without
     # the pin that shuffle runs four times (r8 plan-sweep multi-scan
     # rule). Bounded: <= n_sessions x n_event_types rows, 3 narrow cols.
-    et = s.select("user_id", "session_id", "event_type").distinct().persist()
+    et = materialize(s.select("user_id", "session_id", "event_type").distinct())
     tot = (
         et.select("user_id", "session_id")
         .distinct()
@@ -6388,7 +6392,7 @@ def _q231_embedding_norm_audit(spark, sf):
     # job below (stats, histogram, rank fetch) plus the final audit agg
     # used to RE-DERIVE it from the parquet scan. The cached frame is
     # two longs per vector; all consumers read it.
-    vecs = emb.select(F.col("vec_id"), n2.alias("n2")).persist()
+    vecs = materialize(emb.select(F.col("vec_id"), n2.alias("n2")))
     th = exact_quantiles(vecs, "n2", [0.01, 0.99])
     lo, hi = int(th[0.01][1]), int(th[0.99][1])
     return vecs.agg(
@@ -6485,9 +6489,11 @@ def _q234_dedup_survivorship(spark, sf):
     from polars_pipe_spark.functions.dedup import dedup_clusters, minhash_near_dups
 
     docs = _t_par(spark, sf, "documents")
-    pairs = minhash_near_dups(
-        docs, "text", "doc_id", shingle_k=3, sig_k=8, n_bands=4, threshold=0.2,
-    ).select("id_a", "id_b").persist()
+    pairs = materialize(
+        minhash_near_dups(
+            docs, "text", "doc_id", shingle_k=3, sig_k=8, n_bands=4, threshold=0.2,
+        ).select("id_a", "id_b")
+    )
     clusters = dedup_clusters(pairs).select(
         F.col("node").alias("doc_id"), "cluster_id"
     )
@@ -6795,12 +6801,11 @@ def _q241_dup_graph_triangles(spark, sf):
     from polars_pipe_spark.functions.dedup import minhash_near_dups
 
     docs = _t_par(spark, sf, "documents")
-    e = (
+    e = materialize(
         minhash_near_dups(
             docs, "text", "doc_id", shingle_k=3, sig_k=8, n_bands=4, threshold=0.2
         )
         .select("id_a", "id_b")
-        .persist()
     )
     two_hop = (
         e.select(F.col("id_a").alias("a"), F.col("id_b").alias("b"))
@@ -7233,7 +7238,7 @@ def _q253_kmv_theta(spark, sf):
     # distinct-over-events + bounded selection, and each is consumed 3x
     # (theta agg, intersection join, final assembly) — without persist
     # the distinct re-runs six times (r8 plan-sweep multi-scan rule)
-    a, b = side("purchase").persist(), side("click").persist()
+    a, b = materialize(side("purchase")), materialize(side("click"))
     theta_a = a.agg(F.max("h").alias("ta"), F.count(F.lit(1)).alias("ka"))
     theta_b = b.agg(F.max("h").alias("tb"), F.count(F.lit(1)).alias("kb"))
     # shared hashes below min(theta): intersection sample
@@ -7302,9 +7307,9 @@ def _q254_phrase_search(spark, sf):
     from polars_pipe_spark.functions.text import shingles, tokens
 
     docs = _t_par(spark, sf, "documents")
-    post = docs.select(
-        "doc_id", F.posexplode(tokens("text")).alias("pos", "token")
-    ).persist()
+    post = materialize(
+        docs.select("doc_id", F.posexplode(tokens("text")).alias("pos", "token"))
+    )
     bigrams = docs.select(F.explode(shingles("text", 2)).alias("bg"))
     top3_rows = (
         bigrams.groupBy("bg")
@@ -7474,7 +7479,7 @@ def _q256_entity_resolution(spark, sf):
             F.round(F.col("c_acctbal") * 100).cast("long").alias("cents"),
         )
     )
-    records = cust.unionByName(clones).persist()
+    records = materialize(cust.unionByName(clones))
     a = records.alias("a")
     b = records.select(
         F.col("rec_id").alias("rec_b"),
@@ -7590,7 +7595,7 @@ def _q259_theil_sen(spark, sf):
     DIV/ // agree), and the median is the lower-median by rank — every
     value integer, fully oracle-checkable."""
     ev = _t_par(spark, sf, "events")
-    daily = (
+    daily = materialize(
         ev.groupBy(
             "event_type",
             F.datediff(F.col("ts").cast("date"), F.lit("1970-01-01").cast("date")).alias(
@@ -7598,7 +7603,6 @@ def _q259_theil_sen(spark, sf):
             ),
         )
         .agg(F.sum(F.round(F.col("value") * 100).cast("long")).alias("y_cents"))
-        .persist()
     )
     b = daily.select(
         F.col("event_type"),
@@ -7726,7 +7730,7 @@ def _q262_seasonal_backtest(spark, sf):
     days) and signed bias (sign-split DIV). One daily aggregate + one
     7-day-lag self-join per event type — both keyed, no windows."""
     ev = _t_par(spark, sf, "events")
-    daily = (
+    daily = materialize(
         ev.groupBy(
             "event_type",
             F.datediff(F.col("ts").cast("date"), F.lit("1970-01-01").cast("date")).alias(
@@ -7734,7 +7738,6 @@ def _q262_seasonal_backtest(spark, sf):
             ),
         )
         .agg(F.sum(F.round(F.col("value") * 100).cast("long")).alias("cents"))
-        .persist()
     )
     fc = daily.select(
         "event_type",
@@ -7835,10 +7838,10 @@ def _q264_sparse_cosine_topk(spark, sf):
 
     docs = _t_par(spark, sf, "documents")
     tok = docs.select("doc_id", F.explode(tokens("text")).alias("token"))
-    tf = tok.groupBy("doc_id", "token").agg(F.count(F.lit(1)).alias("tf")).persist()
+    tf = materialize(tok.groupBy("doc_id", "token").agg(F.count(F.lit(1)).alias("tf")))
     n_docs = docs.agg(F.countDistinct("doc_id").alias("n_docs"))
     dfreq = tf.groupBy("token").agg(F.count(F.lit(1)).alias("df"))
-    w = (
+    w = materialize(
         tf.join(dfreq.filter(F.col("df") <= 50), "token")
         .crossJoin(F.broadcast(n_docs))
         .select(
@@ -7851,7 +7854,6 @@ def _q264_sparse_cosine_topk(spark, sf):
             .cast("long")
             .alias("w_micro"),
         )
-        .persist()
     )
     norms = w.groupBy("doc_id").agg(
         F.sum(F.col("w_micro") * F.col("w_micro")).alias("norm2")
@@ -8018,7 +8020,7 @@ def _q267_er_evaluation(spark, sf):
             F.round(F.col("c_acctbal") * 100).cast("long").alias("cents"),
         )
     )
-    records = cust.unionByName(clones).persist()
+    records = materialize(cust.unionByName(clones))
     b = records.select(
         F.col("rec_id").alias("rec_b"),
         F.col("name").alias("name_b"),
@@ -8037,9 +8039,11 @@ def _q267_er_evaluation(spark, sf):
     clusters = dedup_clusters(edges).select(
         F.col("node").alias("rec_id"), "cluster_id"
     )
-    resolved = records.join(clusters, "rec_id", "left").select(
-        "rec_id", F.coalesce("cluster_id", F.col("rec_id")).alias("entity_id")
-    ).persist()
+    resolved = materialize(
+        records.join(clusters, "rec_id", "left").select(
+            "rec_id", F.coalesce("cluster_id", F.col("rec_id")).alias("entity_id")
+        )
+    )
     # predicted pairs = Σ sz·(sz−1)/2 over entities
     pred = resolved.groupBy("entity_id").agg(F.count(F.lit(1)).alias("sz")).agg(
         F.sum(F.expr("(sz * (sz - 1)) DIV 2")).alias("n_pred_pairs")
@@ -8224,13 +8228,12 @@ def _q270_ipf_raking(spark, sf):
     margin-keyed partial aggregate joined back; the 35-cell frame is
     tiny but the shape is margin-keyed, never a global window."""
     ev = _t_par(spark, sf, "events")
-    cells = (
+    cells = materialize(
         ev.groupBy(
             "event_type",
             F.expr("datediff(CAST(ts AS DATE), DATE '2024-01-01') % 7").alias("dow"),
         )
         .agg(F.count(F.lit(1)).alias("n"))
-        .persist()
     )
     total = cells.agg(F.sum("n").alias("t")).first()["t"]
     t_row_micro = (int(total) // 5) * 1_000_000
@@ -8252,7 +8255,7 @@ def _q270_ipf_raking(spark, sf):
             )
         )
         cs = w.groupBy("dow").agg(F.sum("w").alias("cs"))
-        w = (
+        w = materialize(
             w.join(cs, "dow")
             .select(
                 "event_type",
@@ -8261,8 +8264,8 @@ def _q270_ipf_raking(spark, sf):
                     f"CAST(CAST(w AS DECIMAL(38,0)) * {t_col_micro}"
                     " AS DECIMAL(38,0)) DIV cs"
                 ).cast("long").alias("w"),
-            )
-            .localCheckpoint()
+            ),
+            truncate=True,
         )
     return w.select(
         "event_type",
@@ -8350,7 +8353,7 @@ def _q272_sorted_neighborhood(spark, sf):
             F.round(F.col("c_acctbal") * 100).cast("long").alias("cents"),
         )
     )
-    records = cust.unionByName(clones).persist()
+    records = materialize(cust.unionByName(clones))
     blk = records.withColumn("blk", F.substring("name", 1, 1))
     w = Window.partitionBy("blk").orderBy("name", "rec_id")
     with_leads = blk.select(
@@ -8429,9 +8432,11 @@ def _q273_soft_dedup_weights(spark, sf):
     from polars_pipe_spark.functions.dedup import dedup_clusters, minhash_near_dups
 
     docs = _t_par(spark, sf, "documents")
-    pairs = minhash_near_dups(
-        docs, "text", "doc_id", shingle_k=3, sig_k=8, n_bands=4, threshold=0.2
-    ).select("id_a", "id_b").persist()
+    pairs = materialize(
+        minhash_near_dups(
+            docs, "text", "doc_id", shingle_k=3, sig_k=8, n_bands=4, threshold=0.2
+        ).select("id_a", "id_b")
+    )
     clusters = dedup_clusters(pairs).select(
         F.col("node").alias("doc_id"), "cluster_id"
     )

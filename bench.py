@@ -247,6 +247,7 @@ def main() -> None:
 
     import __spark_entry__ as entry_mod
     from polars_pipe_spark import get_spark
+    from polars_pipe_spark.materialize import released
 
     spark = get_spark(app_name="bench")
     # SPARK_GRAFT_BENCH_REGISTRY=ladder times the full-fidelity TPC-H
@@ -327,16 +328,17 @@ def main() -> None:
     for name in names:
         samples: list[float] = []
         for _ in range(runs):
-            # honest per-run numbers: queries that persist() reused
+            # honest per-run numbers: queries that materialise reused
             # intermediates must pay their cache-fill inside the measured
             # run, not inherit a warm cache from the previous run; also
-            # stops cached frames accumulating across the whole sweep
-            spark.catalog.clearCache()
-            t0 = time.time()
+            # stops cached frames accumulating across the whole sweep.
+            # The release runs on leaving the scope, outside the timing.
             try:
-                df = qmap[name](spark, sf_dir)
-                df.write.format("noop").mode("overwrite").save()
-                samples.append(round(time.time() - t0, 3))
+                with released():
+                    t0 = time.time()
+                    df = qmap[name](spark, sf_dir)
+                    df.write.format("noop").mode("overwrite").save()
+                    samples.append(round(time.time() - t0, 3))
             except ValueError as e:
                 if "pair budget" in str(e):
                     # the query's own scale fence fired (exact all-pairs

@@ -33,6 +33,7 @@ import math
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
+from polars_pipe_spark.materialize import materialize
 from polars_pipe_spark.session import shuffle_partitions
 
 from polars_pipe_spark.functions.text import doc_fingerprint, shingles, tokens
@@ -333,7 +334,6 @@ def minhash_near_dups(
     sig_k: int = 8,
     n_bands: int = 4,
     threshold: float = 0.5,
-    cache_intermediates: bool | str = "sets",
     max_band_members: int | None = 1000,
 ) -> DataFrame:
     """Full pipeline: LSH candidates → exact Jaccard → threshold.
@@ -343,43 +343,20 @@ def minhash_near_dups(
     The single-DAG formulation derives the signatures FROM the
     distinct-shingle sets (one tokenise+shingle pipeline feeding both the
     banding branch and the verification join) instead of recomputing
-    shingles per branch. ``cache_intermediates`` picks what to persist
-    in Spark's columnar cache (MEMORY_AND_DISK — spills/evicts
-    gracefully at 100 TB; callers can ``spark.catalog.clearCache()``
-    after consuming the result):
-
-    - ``"sets"`` (default): persist only ``sets`` (read 3×: signatures
-      + both verification joins).
-    - ``"all"``/``True``: also persist ``banded`` (self-joined, read
-      2×).
-    - ``"none"``/``False``: pure recompute.
-
-    Measured at sf0.1 under the driver's bench protocol (warm JVM,
-    best-of-2, cache cleared per run): none 1.62s / sets 1.72s / all
-    1.63s — all within noise, so the round-2 bench's 4.5s reading for
-    ``"all"`` was environment noise, not the double-persist. ``"sets"``
-    is the default anyway: it caches the one genuinely 3×-read frame
-    while keeping the resident cache footprint minimal, which is what
-    matters under executor memory pressure at real scale.
-
-    NOTE ``localCheckpoint`` was measured SLOWER than recompute here
-    (object-serialized RDD scans of big array columns defeat
-    whole-stage codegen) — the columnar cache is the right tool."""
-    cache = {True: "all", False: "none"}.get(cache_intermediates, cache_intermediates)
-    if cache not in ("sets", "all", "none"):
-        # a typo like "set"/"ALL" would otherwise silently run with no
-        # persistence at all — a ~5x recompute with no error
-        raise ValueError(
-            f"cache_intermediates={cache_intermediates!r} not in "
-            "{'sets', 'all', 'none', True, False}"
-        )
+    shingles per branch. Only ``sets`` is materialised (read 3×:
+    signatures + both verification joins). Measured at sf0.1 (warm JVM,
+    best-of-2, cache cleared per run), caching nothing / ``sets`` /
+    ``sets`` plus the 2×-read ``banded`` frame ran 1.62 / 1.72 / 1.63 s,
+    all within noise; caching ``sets`` alone keeps the resident cache
+    smallest, which is what matters under executor memory pressure.
+    A checkpoint was measured SLOWER than recompute here (RDD scans of
+    big array columns defeat whole-stage codegen)."""
     rows_per_band = sig_k // n_bands
     sets = df.select(
         F.col(id_col).alias("id"),
         F.array_distinct(shingles(text_col, shingle_k)).alias("sh"),
     )
-    if cache in ("sets", "all"):
-        sets = sets.persist()
+    sets = materialize(sets)
 
     sig_df = sets.select(
         "id",
@@ -391,9 +368,7 @@ def minhash_near_dups(
     banded = sig_df.select(
         "id", F.explode(lsh_bands(F.col("sig"), n_bands, rows_per_band)).alias("band")
     ).distinct()
-    if cache == "all":
-        banded = banded.persist()
-    # guardrail after the (optional) persist; see minhash_lsh_candidates
+    # guardrail; see minhash_lsh_candidates
     # for the measured recompute-vs-persist trade (recompute wins)
     banded = _cap_band_buckets(banded, max_band_members)
     a, b = banded.alias("a"), banded.alias("b")
@@ -533,7 +508,7 @@ def simhash_near_dups(
     #   - the frame is persisted: the cap-check aggregate and BOTH
     #     self-join sides consumed it, so the signature pipeline (the
     #     per-token md5 fold — the expensive part) used to run 3×.
-    banded = sig_df.select(
+    banded = materialize(sig_df.select(
         "id",
         "sig",
         F.explode(
@@ -548,7 +523,7 @@ def simhash_near_dups(
                 ]
             )
         ).alias("band"),
-    ).persist()
+    ))
     # finite band-value space (2^band_bits values) CAN uniformly
     # saturate the cap — run the collapse check (raise, don't silently
     # return nothing)
@@ -591,38 +566,22 @@ def dedup_clusters(
     components): each round joins labels across edges and keeps the
     per-node minimum; converges in O(component diameter) rounds — near-dup
     clusters are shallow, so a handful. Each round is one shuffle; the
-    label frame is persisted per round and the loop stops early on a
+    label frame is checkpointed per round and the loop stops early on a
     fixpoint (count of changed labels = 0).
     """
-    # localCheckpoint (not persist): iterative self-joins grow the LOGICAL
-    # plan every round even when data is cached, and Catalyst re-analyzes
-    # the whole history each iteration — minutes of driver time by round
-    # ~10. Checkpointing truncates the lineage so every round plans
-    # against a flat scan.
-    #
-    # `edges` is EAGER (r15, fixing the r14 sf10 regression): round 1's
-    # join job reads it through TWO branches — directly, and via the
-    # lazy `labels` init — so with eager=False both branches race to
-    # materialise it inside one job and the whole upstream pair pipeline
-    # (typically an expensive near-dup candidate generator behind an
-    # unfilled persist) can run twice ("Block rdd_N already exists"
-    # warnings). Measured at sf10 (tools/ab_q63.py, paired, best-of-2):
-    # all-lazy 77.5 s vs edges-eager 58.8 s (0.76x) vs all-eager 59.3 s
-    # — eager `edges` restores the r13 time; the per-round label
-    # checkpoints below keep eager=False (single first consumer, the
-    # fixpoint aggregate, so no duplication — and one scheduled job per
-    # round instead of two, the r14 win).
-    edges = (
+    # truncate, not cache: iterative self-joins grow the LOGICAL plan
+    # every round even when data is cached (see polars_pipe_spark.materialize)
+    edges = materialize(
         pairs.select(F.col(id_a).alias("src"), F.col(id_b).alias("dst"))
         .unionByName(pairs.select(F.col(id_b).alias("src"), F.col(id_a).alias("dst")))
-        .distinct()
-        .localCheckpoint(eager=True)
+        .distinct(),
+        truncate=True,
     )
-    labels = (
+    labels = materialize(
         edges.select(F.col("src").alias("node"))
         .distinct()
-        .withColumn("label", F.col("node"))
-        .localCheckpoint(eager=False)
+        .withColumn("label", F.col("node")),
+        truncate=True,
     )
     for _ in range(max_iterations):
         neighbor_min = (
@@ -636,14 +595,14 @@ def dedup_clusters(
         # the change flag rides the update itself — the fixpoint test is
         # then a flat aggregate over the checkpointed frame instead of a
         # second label-to-label join per round
-        new_labels = (
+        new_labels = materialize(
             labels.join(neighbor_min, labels.node == neighbor_min.src, "left")
             .select(
                 "node",
                 upd.alias("label"),
                 (upd < F.col("label")).cast("int").alias("chg"),
-            )
-            .localCheckpoint(eager=False)
+            ),
+            truncate=True,
         )
         changed = new_labels.agg(F.sum("chg")).first()[0]
         labels = new_labels
@@ -663,7 +622,6 @@ def embedding_near_dups(
     id_col: str,
     threshold: float = 0.95,
     n_planes: int | None = 8,
-    cache_intermediates: bool = True,
     target_occupancy: int = 256,
 ) -> DataFrame:
     """Near-duplicate pairs by cosine similarity, LSH-bucketed (random
@@ -678,11 +636,7 @@ def embedding_near_dups(
     ~78M verify pairs. Costs one column-pruned ``count()`` pre-pass.
     More planes = lower per-pair recall (single-probe collision
     probability (1−θ/π)^planes); callers pinning recall pass an
-    explicit ``n_planes`` and own the occupancy math.
-
-    ``cache_intermediates`` is accepted for API compatibility but is a
-    no-op since the grouped verify (below) consumes the bucketed frame
-    exactly once."""
+    explicit ``n_planes`` and own the occupancy math."""
     from polars_pipe_spark.functions.similarity import (
         bucket_pairs_cosine,
         hyperplane_bucket,
@@ -786,23 +740,20 @@ def semantic_dedup_ledger(
         f"array_min(zip_with(array({', '.join(dists)}), "
         f"sequence(0, {len(centroids) - 1}), (d, i) -> struct(d, i))).i"
     )
-    # eager localCheckpoint, NOT persist (r5 ADVICE fix): the assigned
-    # frame is read twice (self-join sides) so it must be materialised
-    # once, but a .persist() here had no matching unpersist — the cache
-    # manager pins cached plans until explicit unpersist, so repeated
-    # calls in a long session accumulated cached blocks forever.
-    # localCheckpoint blocks skip the cache manager and are released by
-    # the ContextCleaner when the caller drops the returned frame.
+    # truncated (r5 ADVICE fix): the assigned frame is read twice
+    # (self-join sides) so it is materialised once, and checkpoint blocks
+    # skip the cache manager, so a caller outside a released() scope
+    # does not pin cached plans for the session.
     # explicit (cluster, bucket) partitioning at full shuffle width
     # BEFORE the checkpoint, same r8 ladder reasoning as
     # embedding_near_dups: the assigned frame is small in bytes, AQE
     # would coalesce the self-join exchange to ~1 partition, and the
     # quadratic pair fan-out + verify kernel would run serially.
     n_shuffle = shuffle_partitions(df.sparkSession)
-    assigned = (
+    assigned = materialize(
         base.withColumn("cluster_id", F.expr(argmin).cast("long"))
-        .repartition(n_shuffle, "cluster_id", "bucket")
-        .localCheckpoint(eager=True)
+        .repartition(n_shuffle, "cluster_id", "bucket"),
+        truncate=True,
     )
 
     # grouped pair-verify on (cluster, bucket) — same r8 ladder
@@ -911,7 +862,7 @@ def dup_span_stats(
     # where within-document gram repeats are rare), so the per-occurrence
     # form stays. The counts join stays a JOIN (not a window) so AQE
     # skew handling still covers a pathologically hot boilerplate gram.
-    pos = pos.persist()
+    pos = materialize(pos)
     counts = pos.groupBy("g").agg(F.count(F.lit(1)).alias("n_occ"))
     per_doc = (
         pos.join(counts, "g")
@@ -972,10 +923,9 @@ def span_dedup(
     # cache holds the exploded spans once; ownership and reassembly both
     # read it. The ownership join stays a JOIN so AQE skew handling
     # covers a hot boilerplate span.
-    ex = (
+    ex = materialize(
         tok_df.select("id", F.posexplode(spans).alias("pos", "span"))
         .withColumn("skey", F.md5("span"))
-        .persist()
     )
     own = ex.groupBy("skey").agg(
         F.min(F.col("id") * 1000000 + F.col("pos")).alias("owner")
@@ -1005,8 +955,6 @@ def incremental_dedup(
     index: DataFrame,
     text_col: str,
     id_col: str,
-    *,
-    cache: bool = True,
 ) -> DataFrame:
     """Incremental-ingest dedup: classify every row of a NEW batch
     against an EXISTING corpus fingerprint index without rescanning the
@@ -1035,13 +983,8 @@ def incremental_dedup(
     # persist: b feeds the within-batch min AND the classify join — the
     # batch is small by construction, and without the pin its whole
     # lineage (possibly a union of ingest slices) runs twice (r8
-    # plan-sweep multi-scan rule). ``cache=False`` is for callers whose
-    # batch is already materialized and who can't unpersist the handle —
-    # the streaming foreachBatch gate, where a per-micro-batch persist
-    # would leak cached blocks batch after batch.
-    b = batch.select(F.col(id_col), fp)
-    if cache:
-        b = b.persist()
+    # plan-sweep multi-scan rule).
+    b = materialize(batch.select(F.col(id_col), fp))
     idx = index.select("fingerprint").distinct()
     first = b.groupBy("fingerprint").agg(F.min(id_col).alias("__first_id"))
     return (
@@ -1168,7 +1111,7 @@ def incremental_near_dups(
     # shingle+signature pass runs twice per frame. The batch is small
     # by construction (one ingest slice), so pinning it is safe at any
     # corpus size; the INDEX side stays single-use and unpinned.
-    b_sets, b_bands = b_sets.persist(), b_bands.persist()
+    b_sets, b_bands = materialize(b_sets), materialize(b_bands)
     union_bands = b_bands.unionByName(i_bands)
     # r14 (§2.3/§8): cands is persisted (narrow id-pair rows) because it
     # now has TWO consumers — the verify join and the index-set pruning
@@ -1178,7 +1121,7 @@ def incremental_near_dups(
     # index a second time and shuffling every set array into the join,
     # semi-join the raw index rows down to candidate pids first and
     # shingle only those (AQE broadcasts the pid list when it is small).
-    cands = (
+    cands = materialize(
         b_bands.select(F.col("id").alias("bid"), "band")
         .join(
             union_bands.select(
@@ -1191,7 +1134,6 @@ def incremental_near_dups(
         )
         .select("bid", "pid", "side")
         .distinct()
-        .persist()
     )
     index_pids = (
         cands.filter(F.col("side") == "index")
@@ -1261,8 +1203,8 @@ def pagerank_exact(
     than convergence detection keeps the computation SQL-unrollable for
     the oracle, the q169-BPE pattern for iterative algorithms. Each
     round is one partial-agg shuffle on the destination node; the rank
-    frame is ``localCheckpoint``-ed per round (the dedup_clusters
-    lineage-truncation lesson).
+    frame is materialised with ``truncate=True`` per round (the
+    dedup_clusters lineage-truncation lesson).
 
     Returns ``(node, rank_micro)``.
     """
@@ -1272,16 +1214,18 @@ def pagerank_exact(
         )
     if iterations < 0:
         raise ValueError(f"pagerank_exact: iterations={iterations} must be >= 0")
-    edges = (
+    edges = materialize(
         pairs.select(F.col(id_a).alias("s"), F.col(id_b).alias("d"))
         .unionAll(pairs.select(F.col(id_b).alias("s"), F.col(id_a).alias("d")))
         .distinct()
-        .persist()
     )
     deg = edges.groupBy("s").agg(F.count(F.lit(1)).alias("deg"))
-    ranks = deg.select(
-        F.col("s").alias("node"), F.lit(1_000_000).cast("long").alias("rank_micro")
-    ).localCheckpoint()
+    ranks = materialize(
+        deg.select(
+            F.col("s").alias("node"), F.lit(1_000_000).cast("long").alias("rank_micro")
+        ),
+        truncate=True,
+    )
     base = 1_000_000 - damping_ppm
     for _ in range(iterations):
         shares = (
@@ -1289,7 +1233,7 @@ def pagerank_exact(
             .join(ranks.withColumnRenamed("node", "s"), "s")
             .select("d", F.expr("rank_micro DIV deg").alias("share"))
         )
-        ranks = (
+        ranks = materialize(
             shares.groupBy(F.col("d").alias("node"))
             .agg(F.sum("share").alias("inflow"))
             .select(
@@ -1305,11 +1249,7 @@ def pagerank_exact(
                         " AS DECIMAL(38,0)) DIV 1000000"
                     )
                 ).cast("long").alias("rank_micro"),
-            )
-            .localCheckpoint()
+            ),
+            truncate=True,
         )
-    # the final ranks frame is already materialised (localCheckpoint is
-    # eager, lineage truncated), so the edge cache can be released HERE
-    # instead of leaking for the session (r5 ADVICE fix)
-    edges.unpersist()
     return ranks

@@ -24,6 +24,7 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 from polars_pipe_spark.functions.text import token_count, tokens
+from polars_pipe_spark.materialize import materialize
 
 
 def bm25_scores(
@@ -68,7 +69,7 @@ def bm25_scores(
     tok = docs.select(
         F.col(id_col), F.explode(tokens(text_col)).alias("term")
     ).join(F.broadcast(terms), "term")
-    # persist the term-filtered tf frame (r14): it is consumed twice —
+    # materialise the term-filtered tf frame (r14): it is consumed twice —
     # the candidate-id derivation below and the feature join back — and
     # WITHOUT the cache the whole tokenize+explode+aggregate pipeline
     # plans (and runs) once per consumer: the captured q129 plan showed
@@ -78,11 +79,7 @@ def bm25_scores(
     # itself is tiny — one row per (candidate doc, matched term), already
     # pruned by the broadcast term filter — so the cache fill is cheap
     # and the second corpus-wide tokenizing pass disappears.
-    tf = (
-        tok.groupBy(id_col, "term")
-        .agg(F.count(F.lit(1)).alias("tf"))
-        .persist()
-    )
+    tf = materialize(tok.groupBy(id_col, "term").agg(F.count(F.lit(1)).alias("tf")))
     # Late materialisation: tokenize-heavy per-doc features (dl + caller
     # doc_cols) run ONCE per *candidate* document — the semi-join prunes
     # the feature projection to docs matching ≥1 term, so non-candidates

@@ -31,6 +31,7 @@ import pandas as pd  # module-level: pandas_udf resolves 'pd.Series' hints
 from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
 
+from polars_pipe_spark.materialize import materialize
 from polars_pipe_spark.session import shuffle_partitions
 
 
@@ -1723,10 +1724,9 @@ def kmeans_train_exact(
         n_bad = df.filter(bad).count()
         if n_bad:
             _raise_bad(n_bad)
-    # persisted: the seed scan + every iteration's aggregate + the final
-    # labeling all reuse the lattice frame (callers clear caches between
-    # queries — the established persist()-inside-a-query convention)
-    base = base.persist()
+    # materialised: the seed scan + every iteration's aggregate + the
+    # final labeling all reuse the lattice frame
+    base = materialize(base)
     seed = (
         base.filter(F.col("__vm").isNotNull()).orderBy("__id").limit(k).collect()
     )

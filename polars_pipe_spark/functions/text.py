@@ -16,6 +16,8 @@ import pandas as pd
 from pyspark.sql import Column
 from pyspark.sql import functions as F
 
+from polars_pipe_spark.materialize import materialize
+
 # Deterministic, documented marker sets for the language-ID heuristic.
 # (A real pipeline would plug a fastText-style model in via pandas_udf —
 # the *shape* here is the scale-relevant part: pure column expressions.)
@@ -444,27 +446,21 @@ def bpe_train(
     1-row TakeOrdered collect (ties: count desc, left asc, right asc —
     total order), and a pure array-fold expression applies the merge
     leftmost-non-overlapping to every symbol sequence.
-    ``localCheckpoint`` truncates the plan each round — without it the
-    fold nests n_merges deep and codegen blows up (the q63
+    ``materialize(truncate=True)`` cuts the plan each round — without it
+    the fold nests n_merges deep and codegen blows up (the q63
     label-propagation lesson).
 
     Merge-count monotonicity (each chosen count ≤ the previous — new
     pairs created by a merge can occur at most as often as the merge
     itself) is the oracle-checkable property q169 asserts.
     """
-    # lazy checkpoints throughout the loop (r14): eager=False still
-    # truncates lineage and caches the partitions, but materialisation
-    # happens inside the FIRST job that reads the frame (the next
-    # round's pair-count aggregate) instead of as its own job — halving
-    # the per-round job count (8 rounds used to schedule 8 standalone
-    # checkpoint jobs on top of the 8 aggregate+argmax jobs).
-    words = (
+    words = materialize(
         df.select(F.explode(tokens(text_col)).alias("w"))
         .groupBy("w")
         .agg(F.count(F.lit(1)).alias("freq"))
         .withColumn("seq", F.split(F.col("w"), ""))
-        .select("w", "freq", "seq")
-        .localCheckpoint(eager=False)
+        .select("w", "freq", "seq"),
+        truncate=True,
     )
     merges: list[tuple[str, str, int]] = []
     for _ in range(n_merges):
@@ -492,21 +488,17 @@ def bpe_train(
         l, r, cnt = best[0]["l"], best[0]["r"], int(best[0]["cnt"])
         merges.append((l, r, cnt))
         merged = l + r
-        words = words.withColumn(
-            "seq",
-            F.aggregate(
-                F.col("seq"),
-                F.array().cast("array<string>"),
-                lambda acc, x: F.when(
-                    (F.size(acc) > 0)
-                    & (F.element_at(acc, -1) == F.lit(l))
-                    & (x == F.lit(r)),
-                    F.concat(
-                        F.slice(acc, 1, F.size(acc) - 1), F.array(F.lit(merged))
-                    ),
-                ).otherwise(F.concat(acc, F.array(x))),
-            ),
-        ).localCheckpoint(eager=False)
+        seq = F.aggregate(
+            F.col("seq"),
+            F.array().cast("array<string>"),
+            lambda acc, x: F.when(
+                (F.size(acc) > 0)
+                & (F.element_at(acc, -1) == F.lit(l))
+                & (x == F.lit(r)),
+                F.concat(F.slice(acc, 1, F.size(acc) - 1), F.array(F.lit(merged))),
+            ).otherwise(F.concat(acc, F.array(x))),
+        )
+        words = materialize(words.withColumn("seq", seq), truncate=True)
     if return_word_table:
         return merges, words
     return merges

@@ -20,6 +20,7 @@ import pandas as pd
 from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
+from polars_pipe_spark.materialize import materialize
 from polars_pipe_spark.session import shuffle_partitions
 
 
@@ -425,12 +426,12 @@ def fuzzy_join(
     Eagerness note (r11, from ADVICE): with ``max_candidate_pairs``
     set (the default), the guard aggregate runs Spark jobs at CALL
     time — not at the first action on the result — and the exploded
-    deletion-key frames are ``localCheckpoint(eager=False)``-ed so the
-    guard and the join share one materialization. Lineage truncation
-    is a fault-tolerance tradeoff: after executor loss the checkpointed
-    blocks are NOT recomputed from source and the job fails instead
-    (acceptable on a single-app cluster where the caller retries the
-    action; pass ``max_candidate_pairs=None`` to keep the fully-lazy,
+    deletion-key frames are materialised with an eager ``localCheckpoint``
+    (``materialize(truncate=True)``) so the guard and the join share one
+    materialization. Lineage truncation is a fault-tolerance tradeoff:
+    after executor loss the checkpointed blocks are NOT recomputed from
+    source and the job fails instead (acceptable on a single-app cluster
+    where the caller retries the action; pass ``max_candidate_pairs=None`` to keep the fully-lazy,
     recomputable plan at the cost of re-running the deletion-key UDF
     per consumer).
     """
@@ -477,12 +478,12 @@ def fuzzy_join(
         l_raw = l_in.select("__blk", "__lk", dk("__lk"))
         if max_candidate_pairs is not None:
             # the guard would otherwise re-run the ~170x explode once
-            # per consumer: checkpoint the exploded frame lazily so
-            # guard + join — and BOTH sides of a self-join — share one
+            # per consumer: checkpoint the exploded frame so guard +
+            # join — and BOTH sides of a self-join — share one
             # materialization. max_candidate_pairs=None keeps the
             # fully-lazy unstored plan for callers who can't afford the
             # explode storage.
-            l_raw = l_raw.localCheckpoint(eager=False)
+            l_raw = materialize(l_raw, truncate=True)
         if same_side and max_candidate_pairs is not None:
             r = l_raw.select(
                 "__blk", F.col("__lk").alias("__rk"), "__dk"
@@ -493,7 +494,7 @@ def fuzzy_join(
             ).repartition(n_shuffle)
             r = r_in.select("__blk", "__rk", dk("__rk"))
             if max_candidate_pairs is not None and not same_side:
-                r = r.localCheckpoint(eager=False)
+                r = materialize(r, truncate=True)
         if max_candidate_pairs is not None:
             # guard the PRE-join frames (partial aggs combine map-side;
             # the join-key exchange never runs for the guard)

@@ -7,7 +7,8 @@ sys-cols last → name standardisation → plan capture → writes (config YAML,
 transformed data, error records if any, post-transform stats).
 
 Spark-specific changes (semantics-neutral, scale-critical — SURVEY.md §3.4):
-- The tagged (validated) frame and the transformed frame are ``persist()``ed:
+- The tagged (validated) frame and the transformed frame are materialised
+  (cached), and released when the run returns or raises:
   the reference re-evaluates its lazy plan once per action (stats rows,
   explain, chunk sizing, each chunk, error probe, writes — O(8) full
   recomputes); here the source is scanned once per persist point.
@@ -26,6 +27,7 @@ from pyspark.sql import DataFrame
 from polars_pipe_spark.adapters.io import FileType, IOBase
 from polars_pipe_spark.config import GeneralConfig, TransformConfig
 from polars_pipe_spark.logger import RunLog, logger  # noqa: F401 (logger re-export)
+from polars_pipe_spark.materialize import materialize, released
 from polars_pipe_spark.operators import inspect as ins
 from polars_pipe_spark.operators import transform as tf
 from polars_pipe_spark.operators import validation as vl
@@ -67,6 +69,8 @@ def build_transform_chain(
     )
 
 
+# both persist points are released when the run ends, error or not
+@released()
 def run_pipeline(
     io_wrapper: IOBase,
     config: dict,
@@ -105,10 +109,10 @@ def run_pipeline(
     # filters over it — the scan + hash + tag prefix materialises once,
     # not once per branch (SURVEY.md §3.4).
     if rules:
-        tagged = vl.tag_error_reason(tagged_base, rules).persist()
+        tagged = materialize(vl.tag_error_reason(tagged_base, rules))
         valid_df, invalid_df = vl.split_tagged(tagged)
     else:
-        tagged = tagged_base.persist()
+        tagged = materialize(tagged_base)
         valid_df, invalid_df = vl.validate_df(tagged, rules)
 
     dst = Path(parsed.dst_root) / parsed.guid
@@ -128,7 +132,7 @@ def run_pipeline(
         custom_transformation_map=parsed.custom_transformations,
     )
     # Persist point (b): plan capture + data write + post-stats reuse it.
-    transformed = transformed.persist()
+    transformed = materialize(transformed)
 
     parsed.pipeline_plan = optimized_plan_lines(transformed)
 
@@ -167,6 +171,4 @@ def run_pipeline(
         file_type=FileType.YAML,
     )
 
-    tagged.unpersist()
-    transformed.unpersist()
     return parsed

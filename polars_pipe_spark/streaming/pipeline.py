@@ -22,6 +22,7 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql.streaming import StreamingQuery
 
+from polars_pipe_spark.materialize import released
 from polars_pipe_spark.sources.tables import tz_normalise
 
 
@@ -151,7 +152,8 @@ def streaming_pipeline(
         spark.readStream.format(file_format).schema(schema).load(source_dir)
     )
     writer = (
-        stream.writeStream.foreachBatch(batch_fn)
+        # each micro-batch releases what it materialised when it closes
+        stream.writeStream.foreachBatch(released()(batch_fn))
         .option("checkpointLocation", checkpoint_dir)
     )
     if trigger_once:
@@ -304,15 +306,14 @@ def streaming_incremental_dedup(
 
     spark = get_spark()
 
+    # each micro-batch releases what it materialised when it closes
+    @released()
     def apply_batch(batch_df: DataFrame, epoch_id: int) -> None:
         if Path(index_dir).exists():
             index = spark.read.parquet(index_dir)
         else:
             index = spark.createDataFrame([], "fingerprint string")
-        # cache=False: the micro-batch is already source-materialized
-        # and a per-batch persist would leak cached blocks (no handle
-        # to unpersist once the batch closes)
-        tagged = incremental_dedup(batch_df, index, text_col, id_col, cache=False)
+        tagged = incremental_dedup(batch_df, index, text_col, id_col)
         tagged.write.mode("append").parquet(out_dir)
         (
             tagged.filter(F.col("dedup_status") == "new_unique")

@@ -831,18 +831,6 @@ class TestPcaWhiten:
 
 
 class TestRound4Guards:
-    def test_minhash_rejects_typo_cache_mode(self, near_dup_docs):
-        """A typo like 'set' or 'ALL' used to silently run with no
-        persistence (~5x recompute); now it's a loud ValueError."""
-        with pytest.raises(ValueError, match="cache_intermediates"):
-            dd.minhash_near_dups(
-                near_dup_docs, "text", "doc_id", cache_intermediates="set"
-            )
-        with pytest.raises(ValueError, match="cache_intermediates"):
-            dd.minhash_near_dups(
-                near_dup_docs, "text", "doc_id", cache_intermediates="ALL"
-            )
-
     def test_pca_whiten_empty_input_raises_value_error(self, spark):
         from polars_pipe_spark.functions.similarity import pca_whiten
 

@@ -8,7 +8,7 @@ from __future__ import annotations
 
 import pytest
 
-from polars_pipe_spark.adapters.io import FakeIOWrapper
+from polars_pipe_spark.adapters.io import FakeIOWrapper, IOWrapper
 from polars_pipe_spark.services import run_pipeline
 
 SRC = "/fake/employees.parquet"
@@ -193,6 +193,27 @@ class TestFullRun:
         cfg["validation"]["ghost rule"] = ["ghost_col", "is_not_null", None]
         with pytest.raises(ValueError, match="ghost_col"):
             run_pipeline(io, cfg)
+
+    def test_failed_stage_releases_cached_frames(self, spark, employees, tmp_path):
+        """A stage that raises must not leave the run's two cached
+        frames (tagged, transformed) behind in the session."""
+
+        class FailingDataWrite(IOWrapper):
+            def write(self, data, path, file_type, **kwargs):
+                if str(path).endswith("transformed_data"):
+                    raise OSError("disk full")
+                super().write(data, path, file_type, **kwargs)
+
+        src = str(tmp_path / "employees.parquet")
+        employees.write.parquet(src)
+        cfg = {**full_config(), "src_path": src, "dst_root": str(tmp_path / "out")}
+        spark.catalog.clearCache()
+        rdds = spark.sparkContext._jsc.getPersistentRDDs
+        before = set(rdds().keys())
+        with pytest.raises(OSError, match="disk full"):
+            run_pipeline(FailingDataWrite(spark), cfg)
+        assert set(rdds().keys()) <= before  # nothing new survives
+        assert spark._jsparkSession.sharedState().cacheManager().isEmpty()
 
 
 class TestLLMOpsInPipeline:

@@ -142,6 +142,7 @@ def main() -> int:
     sf_dir = os.environ.get("SF_DIR", "/root/testdata/sf0.01")
     import __spark_entry__ as entry_mod
     from polars_pipe_spark import get_spark
+    from polars_pipe_spark.materialize import released
 
     spark = get_spark(app_name="oracle_check")
 
@@ -223,13 +224,13 @@ def main() -> int:
             record(name, err="not_in_queries")
             n_fail += 1
             continue
-        # queries that persist() intermediates must not leak caches into
-        # the rest of the sweep (150+ queries share this one session)
-        spark.catalog.clearCache()
         t0 = time.time()
         try:
-            sdf = queries[name](spark, sf_dir)
-            s_tbl = sdf.toArrow()
+            # what a query materialises must not leak into the rest of
+            # the sweep (150+ queries share this one session)
+            with released():
+                sdf = queries[name](spark, sf_dir)
+                s_tbl = sdf.toArrow()
         except Exception as e:
             print(f"{name}: SPARK ERROR {type(e).__name__}: {str(e)[:200]}")
             record(name, err=f"spark:{type(e).__name__}")
